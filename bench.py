@@ -98,46 +98,48 @@ def main() -> None:
             runs.append(time.perf_counter() - t0)
         return min(runs)
 
-    floor_start = measure_floor()
-    calibration_start = measure_calibration(runs_n=3)
-    io_start = measure_io(runs_n=2)
+    try:
+        floor_start = measure_floor()
+        calibration_start = measure_calibration(runs_n=3)
+        io_start = measure_io(runs_n=2)
 
-    # Fixed (sorted) query order, min-of-3 fresh builds per query.  The
-    # floor is re-sampled every 10 queries: a long single-JVM run
-    # accumulates JVM state (JIT recompiles, code-cache churn, heap growth)
-    # and host noise drifts — per-query floor subtraction must use a floor
-    # measured NEAR the query, not one from the start of the run
-    # (round-3 lesson: the floor rose 34% across one run).
-    # The CALIBRATION kernel is re-sampled every 15 queries for the same
-    # reason (r11 verdict: two end-point samples drifted 26% WITHIN one
-    # run, making the round-over-round normalization ±17% — wider than
-    # any regression it should detect).  Each query records its
-    # nearest-in-time sample; bench_compare normalizes per query.
-    names = [n for n in sorted(QUERIES) if "bench" in TAGS.get(n, ()) or n.startswith("tpch_")]
-    timings: dict[str, float] = {}
-    local_floor: dict[str, float] = {}
-    floors = [floor_start]
-    cal_samples: list[tuple[float, float]] = [(0.0, calibration_start)]
-    io_samples: list[tuple[float, float]] = [(0.0, io_start)]
-    for i, name in enumerate(names):
-        if i and i % 10 == 0:
-            floors.append(measure_floor())
-        if i and i % 15 == 0:
-            cal_samples.append((float(i), measure_calibration()))
-            io_samples.append((float(i), measure_io()))
-        runs = []
-        for _ in range(3):
-            t0 = time.perf_counter()
-            rows = QUERIES[name](spark, sf_dir).collect()
-            runs.append(time.perf_counter() - t0)
-            _ = len(rows)
-        timings[name] = round(min(runs), 3)
-        local_floor[name] = floors[-1]
-    floors.append(measure_floor())
-    calibration_end = measure_calibration(runs_n=3)
-    cal_samples.append((float(len(names)), calibration_end))
-    io_samples.append((float(len(names)), measure_io(runs_n=2)))
-    shutil.rmtree(io_tmp, ignore_errors=True)
+        # Fixed (sorted) query order, min-of-3 fresh builds per query.  The
+        # floor is re-sampled every 10 queries: a long single-JVM run
+        # accumulates JVM state (JIT recompiles, code-cache churn, heap growth)
+        # and host noise drifts — per-query floor subtraction must use a floor
+        # measured NEAR the query, not one from the start of the run
+        # (round-3 lesson: the floor rose 34% across one run).
+        # The CALIBRATION kernel is re-sampled every 15 queries for the same
+        # reason (r11 verdict: two end-point samples drifted 26% WITHIN one
+        # run, making the round-over-round normalization ±17% — wider than
+        # any regression it should detect).  Each query records its
+        # nearest-in-time sample; bench_compare normalizes per query.
+        names = [n for n in sorted(QUERIES) if "bench" in TAGS.get(n, ()) or n.startswith("tpch_")]
+        timings: dict[str, float] = {}
+        local_floor: dict[str, float] = {}
+        floors = [floor_start]
+        cal_samples: list[tuple[float, float]] = [(0.0, calibration_start)]
+        io_samples: list[tuple[float, float]] = [(0.0, io_start)]
+        for i, name in enumerate(names):
+            if i and i % 10 == 0:
+                floors.append(measure_floor())
+            if i and i % 15 == 0:
+                cal_samples.append((float(i), measure_calibration()))
+                io_samples.append((float(i), measure_io()))
+            runs = []
+            for _ in range(3):
+                t0 = time.perf_counter()
+                rows = QUERIES[name](spark, sf_dir).collect()
+                runs.append(time.perf_counter() - t0)
+                _ = len(rows)
+            timings[name] = round(min(runs), 3)
+            local_floor[name] = floors[-1]
+        floors.append(measure_floor())
+        calibration_end = measure_calibration(runs_n=3)
+        cal_samples.append((float(len(names)), calibration_end))
+        io_samples.append((float(len(names)), measure_io(runs_n=2)))
+    finally:
+        shutil.rmtree(io_tmp, ignore_errors=True)
     # nearest-in-time kernel sample per query (by run position)
     cal_per_query = {
         name: min(cal_samples, key=lambda pv: abs(pv[0] - (i + 0.5)))[1]

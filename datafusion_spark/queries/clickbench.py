@@ -17,7 +17,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from datafusion_spark.catalog import load_table
-from datafusion_spark.queries.helpers import two_level_distinct
 from datafusion_spark.queries.registry import query
 
 
@@ -37,26 +36,10 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     tags=("clickbench", "bench"),
 )
 def cb_overview_counts(spark, sf_dir):
-    """Two multi-distinct shapes behind the input-size guard (r13, guide
-    §2.3; see two_level_distinct): below the crossover, Spark's
-    Expand(3x)-based single-scan aggregate (measured faster at sf0.1 in
-    r12); above it, a first-level GROUP BY (user_id, event_type) compacts
-    the fact to its distinct pairs — the Expand and both distincts then
-    run over pairs, not rows, and the decimal partial sums re-aggregate
-    exactly (decimal addition is associative).  Rows identical (pinned
-    both ways in tests/test_operators.py)."""
+    """One scan: Spark plans the two distincts as Expand(3x) + partial
+    aggregate (measured faster than a first-level (user_id, event_type)
+    compaction at sf0.1 in r12)."""
     e = _t(spark, sf_dir, "events")
-    if two_level_distinct(sf_dir, "events"):
-        pairs = e.groupBy("user_id", "event_type").agg(
-            F.count(F.lit(1)).alias("pn"),
-            F.sum(F.col("value").cast("decimal(38,6)")).alias("ps"),
-        )
-        return pairs.agg(
-            F.sum("pn").alias("n_events"),
-            F.count_distinct(F.col("user_id")).alias("n_users"),
-            F.count_distinct(F.col("event_type")).alias("n_types"),
-            F.sum("ps").cast("double").alias("total_value"),
-        )
     return e.agg(
         F.count(F.lit(1)).alias("n_events"),
         F.count_distinct(F.col("user_id")).alias("n_users"),

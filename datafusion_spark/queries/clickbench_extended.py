@@ -25,29 +25,17 @@ from __future__ import annotations
 
 from datafusion_spark.catalog import load_table
 from datafusion_spark.queries.clickbench_full import _hits_select, _pruned_hits_spark
-from datafusion_spark.queries.helpers import two_level_distinct
 from datafusion_spark.queries.registry import query
 
 
-def _cbx(n: int, body: str, duck_body: str | None = None, tags: tuple = (),
-         big_body: str | None = None):
+def _cbx(n: int, body: str, duck_body: str | None = None, tags: tuple = ()):
     # Spark side: hits CTE pruned to the referenced columns (analysis-cost
     # optimization, see _pruned_hits_spark); DuckDB oracle text untouched.
-    # ``big_body`` (r13): an equivalent Spark-side respelling used ABOVE
-    # the two_level_distinct input-size crossover (multi-DISTINCT split
-    # into single-distinct branches — each auto-planned as a two-level
-    # partial-distinct aggregate scanning only its own column — instead of
-    # Expand(n+1 x rows)); row-identity of both shapes pinned in
-    # tests/test_operators.py, oracle text untouched.
     spark_sql = f"WITH hits AS ({_pruned_hits_spark(body)})\n{body}"
     duck_sql = f"WITH hits AS ({_hits_select('duck')})\n{duck_body or body}"
-    big_sql = (f"WITH hits AS ({_pruned_hits_spark(big_body)})\n{big_body}"
-               if big_body else None)
 
-    def fn(spark, sf_dir, _sql=spark_sql, _big=big_sql):
+    def fn(spark, sf_dir, _sql=spark_sql):
         load_table(spark, sf_dir, "events").createOrReplaceTempView("events_cb")
-        if _big and two_level_distinct(sf_dir, "events"):
-            return spark.sql(_big)
         return spark.sql(_sql)
 
     fn.__name__ = f"cbx_q{n:02d}"
@@ -60,18 +48,10 @@ def _cbx(n: int, body: str, duck_body: str | None = None, tags: tuple = (),
 
 _cbx(0, """SELECT CAST(COUNT(DISTINCT SearchPhrase) AS BIGINT) AS d_phrase,
 CAST(COUNT(DISTINCT MobilePhone) AS BIGINT) AS d_phone,
-CAST(COUNT(DISTINCT MobilePhoneModel) AS BIGINT) AS d_model FROM hits""",
-     big_body="""SELECT d_phrase, d_phone, d_model
-FROM (SELECT CAST(COUNT(DISTINCT SearchPhrase) AS BIGINT) AS d_phrase FROM hits)
-CROSS JOIN (SELECT CAST(COUNT(DISTINCT MobilePhone) AS BIGINT) AS d_phone FROM hits)
-CROSS JOIN (SELECT CAST(COUNT(DISTINCT MobilePhoneModel) AS BIGINT) AS d_model FROM hits)""")
+CAST(COUNT(DISTINCT MobilePhoneModel) AS BIGINT) AS d_model FROM hits""")
 _cbx(1, """SELECT CAST(COUNT(DISTINCT HitColor) AS BIGINT) AS d_color,
 CAST(COUNT(DISTINCT BrowserCountry) AS BIGINT) AS d_country,
-CAST(COUNT(DISTINCT BrowserLanguage) AS BIGINT) AS d_lang FROM hits""",
-     big_body="""SELECT d_color, d_country, d_lang
-FROM (SELECT CAST(COUNT(DISTINCT HitColor) AS BIGINT) AS d_color FROM hits)
-CROSS JOIN (SELECT CAST(COUNT(DISTINCT BrowserCountry) AS BIGINT) AS d_country FROM hits)
-CROSS JOIN (SELECT CAST(COUNT(DISTINCT BrowserLanguage) AS BIGINT) AS d_lang FROM hits)""")
+CAST(COUNT(DISTINCT BrowserLanguage) AS BIGINT) AS d_lang FROM hits""")
 _cbx(2, """SELECT BrowserCountry,
 CAST(COUNT(DISTINCT SocialNetwork) AS BIGINT) AS d_net,
 CAST(COUNT(DISTINCT HitColor) AS BIGINT) AS d_color,

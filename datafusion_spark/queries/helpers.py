@@ -11,47 +11,10 @@ reference datafusion/functions-aggregate/src/sum.rs).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 DEC = "decimal(38,6)"
-
-
-def table_bytes(sf_dir: str, name: str) -> int:
-    """On-disk bytes of a source parquet table (file or directory)."""
-    p = os.path.join(sf_dir, f"{name}.parquet")
-    if os.path.isdir(p):
-        return sum(
-            os.path.getsize(os.path.join(root, f))
-            for root, _, files in os.walk(p) for f in files)
-    try:
-        return os.path.getsize(p)
-    except OSError:
-        return 0
-
-
-def two_level_distinct(sf_dir: str, table: str) -> bool:
-    """Size guard for multi-DISTINCT aggregates (r13, r12 verdict item 4).
-
-    Spark plans a multi-distinct aggregate as Expand(n+1 x input rows) +
-    partial agg — the right trade at bench scale (ONE scan; the r12 A/B
-    measured the rewrite slower at sf0.1) but the wrong one at 100 TB,
-    where multiplying every fact row (n+1)x before the map-side aggregate
-    dominates and independent single-distinct branches (each auto-planned
-    by Spark as a partial-distinct two-level aggregate, each scanning only
-    its own column) win.  Input size picks the shape; the crossover
-    default (256 MiB of source parquet, roughly sf10 for events) is
-    deliberately far above the driver's bench SFs so local plans — and the
-    driver's bench comparability — keep the measured-faster Expand shape.
-    Override with DFSPARK_DISTINCT_EXPAND_MAX_BYTES (tests pin BOTH shapes
-    row-identical by forcing it to 0).  Both shapes compute the same rows;
-    the DuckDB oracle text never changes.
-    """
-    limit = int(os.environ.get("DFSPARK_DISTINCT_EXPAND_MAX_BYTES",
-                               str(256 * 1024 * 1024)))
-    return table_bytes(sf_dir, table) > limit
 
 
 def dsum(col: Column | str, alias: str) -> Column:

@@ -40,23 +40,33 @@ Query-text adaptations (each inline, same policy as tpch.py):
 Scale: the fact derivation is a single lineitem⋈orders equi-join on
 l_orderkey (co-partitioned); date_dim and item are dimension-sized and
 broadcast into the star join exactly as a real TPC-DS plan would.
+
+Execution rewrites: every entry registers through _register, whose two
+primitives respell only the Spark side (the DuckDB oracle always runs the
+inline body, and tests/test_plans.py pins rewritten==inline rows):
+  push={cte: pred}        keep only the rows of ``cte`` satisfying
+                          ``pred`` — a date window the body implies,
+                          pushed below the fact's base join, or a filter
+                          on a materialization.
+  materialize=[cte, ...]  compute ``cte`` once per invocation into fresh
+                          scratch parquet and redefine it as a scan of
+                          that copy; ``fact_base`` names the lineitem⋈orders
+                          join shared by every fact channel.
+Scratch lives under one per-process directory, made on first use and
+removed at interpreter exit.
 """
 
 from __future__ import annotations
 
-import itertools
+import atexit
 import os
 import re
+import shutil
 import tempfile
+from typing import NamedTuple
 
 from datafusion_spark.catalog import load_table, register_views
 from datafusion_spark.queries.registry import query
-
-# process-local scratch for per-invocation CTE materializations (see
-# _register_shared_cte): fresh directory per call, nothing reused across
-# invocations, cleaned with the sandbox /tmp
-_MAT_TMP = tempfile.mkdtemp(prefix="dfspark_tpcds_mat_")
-_MAT_SEQ = itertools.count()
 
 # The derive prelude defines a CTE named `customer` (the TPC-DS customer,
 # derived FROM the TPC-H base table).  A later CTE (customer_address) also
@@ -931,43 +941,33 @@ _BENCH_TPCDS = {"tpcds_q4", "tpcds_q14", "tpcds_q49", "tpcds_q51",
                 "tpcds_q64", "tpcds_q67", "tpcds_q78", "tpcds_q95"}
 
 
-def _split_ctes(derive_sql: str) -> list[tuple[str, str]]:
-    """Split a ``WITH a AS (...), b AS (...)`` prelude into ordered
-    (name, "name AS (...)") pairs via a paren-depth scan (no parens occur
-    inside the derive's string literals; _ctes_cover_derive() pins that)."""
-    rest = derive_sql[re.search(r"\bWITH\b", derive_sql).end():]
+def _split_ctes(sql: str) -> tuple[list[tuple[str, str]], str]:
+    """Split ``[WITH] a AS (...), b AS (...) <rest>`` into its ordered
+    (name, "name AS (...)") CTEs via a paren-depth scan, and the rest (no
+    parens occur inside the CTEs' string literals; the prelude-pruning
+    test in tests/test_plans.py pins that the split covers the derive)."""
     out: list[tuple[str, str]] = []
-    pat = re.compile(r"[\s,]*([a-z_]+)\s+AS\s+\(")
+    pat = re.compile(r"[\s,]*(?:WITH\s+)?(\w+)\s+AS\s+\(")
     i = 0
-    while True:
-        m = pat.match(rest, i)
-        if not m:
-            break
+    while m := pat.match(sql, i):
         depth, j = 1, m.end()
         while depth:
-            if rest[j] == "(":
+            if sql[j] == "(":
                 depth += 1
-            elif rest[j] == ")":
+            elif sql[j] == ")":
                 depth -= 1
             j += 1
-        out.append((m.group(1), rest[m.start(1):j]))
+        out.append((m.group(1), sql[m.start(1):j]))
         i = j
-    return out
+    return out, sql[i:]
 
 
-_CTES = _split_ctes(_SPARK_DERIVE)
-_CTE_NAMES = [n for n, _ in _CTES]
-# inter-CTE references (none today — every derive reads parquet directly —
-# but computed so a future edit can't silently break the closure)
-_CTE_DEPS = {
-    n: {m for m in _CTE_NAMES
-        if m != n and re.search(rf"\b{re.escape(m)}\b", text)}
-    for n, text in _CTES
-}
+_CTES, _ = _split_ctes(_SPARK_DERIVE)
 
 
-def _pruned_prelude(body: str, cte_where: dict[str, str] | None = None) -> str:
-    """The derive prelude restricted to the CTEs ``body`` references.
+def _with(ctes: list[tuple[str, str]], stmt: str) -> str:
+    """``WITH <ctes> <stmt>`` keeping only the CTEs ``stmt`` reaches,
+    transitively (a CTE can only read CTEs defined before it).
 
     spark.sql() re-analyzes its whole text on EVERY execution, and the full
     24-table derive costs ~2 s of single-threaded driver analysis per call
@@ -975,161 +975,40 @@ def _pruned_prelude(body: str, cte_where: dict[str, str] | None = None) -> str:
     — measured 1.9-2.8 s/run at sf0.1 against 0.8 s of actual execution.
     Dropping the unreferenced CTE definitions is result-identical (they are
     exactly what the analyzer itself would discard) and cuts the analyzed
-    text to the tables the query touches.  A missed reference fails loudly
-    (TABLE_OR_VIEW_NOT_FOUND), never silently.
-
-    ``cte_where`` (r13, guide §2.3 "shuffle fewer bytes"): extra predicate
-    appended to a named derive CTE, for pushing a date window the BODY
-    already implies below the fact's base join (the body's d_* constraint
-    reaches the fact only at the date_dim broadcast join — AFTER the
-    lineitem⋈orders pass; sold_date_sk = f(o_orderdate) with f injective,
-    so the o_orderdate window keeps exactly the rows that can survive).
-    Each call site documents its implication; the DuckDB oracle runs the
-    UNMODIFIED body and the rewritten==inline row pins in tests/
-    test_plans.py enforce equivalence.
-    """
-    kept = _kept_ctes(body)
-    if cte_where:
-        missing = set(cte_where) - {n for n, _ in kept}
-        assert not missing, f"cte_where targets not in closure: {missing}"
-        kept = [(n, _append_where(text, n, cte_where[n]))
-                if n in cte_where else (n, text) for n, text in kept]
-    return "\nWITH " + ",\n".join(text for _, text in kept) + "\n"
+    text to the tables the statement touches.  A missed reference fails
+    loudly (TABLE_OR_VIEW_NOT_FOUND), never silently."""
+    kept, reach = [], stmt
+    for name, text in reversed(ctes):
+        if re.search(rf"\b{name}\b", reach):
+            kept.append(text)
+            reach += text
+    return ("\nWITH " + ",\n".join(reversed(kept)) + "\n" if kept else "") + stmt
 
 
 def _append_where(text: str, name: str, pred: str) -> str:
-    """CTE text with ``pred`` conjoined to its WHERE clause (the predicate
-    references BASE-table columns like o_orderdate, which the CTE's
-    projection drops — so it must land inside the CTE, not around it).
-    Depth-aware scan for an existing top-level WHERE; the derive CTEs this
-    targets are plain SELECT..FROM..[WHERE] shapes (asserted)."""
+    """CTE text with ``pred`` conjoined as ``WHERE (<existing>) AND
+    (<pred>)`` (the predicate references BASE-table columns like
+    o_orderdate, which the CTE's projection drops — so it must land inside
+    the CTE, not around it).  Depth-aware scan for an existing top-level
+    WHERE; the derive CTEs this targets are plain SELECT..FROM..[WHERE]
+    shapes (asserted)."""
     prefix = f"{name} AS ("
     assert text.startswith(prefix) and text.rstrip().endswith(")"), text[:60]
     inner = text.rstrip()[len(prefix):-1]
-    depth, has_where = 0, False
+    depth, where = 0, None
     for i, ch in enumerate(inner):
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif depth == 0 and inner[i:i + 6] == "WHERE " and (
-                i == 0 or not (inner[i - 1].isalnum() or inner[i - 1] == "_")):
-            has_where = True
-    for kw in ("GROUP BY", "HAVING", "ORDER BY", "LIMIT"):
-        d = 0
-        for i, ch in enumerate(inner):
-            if ch == "(":
-                d += 1
-            elif ch == ")":
-                d -= 1
-            assert not (d == 0 and inner[i:i + len(kw)] == kw), \
-                f"{name}: cte_where cannot target a CTE with top-level {kw}"
-    conj = "AND" if has_where else "WHERE"
-    return f"{prefix}{inner}\n  {conj} ({pred})\n)"
-
-
-def _kept_ctes(body: str) -> list[tuple[str, str]]:
-    """The (name, text) derive CTEs ``body`` references, transitively,
-    in original prelude order (the closure _pruned_prelude keeps)."""
-    used = {n for n in _CTE_NAMES if re.search(rf"\b{re.escape(n)}\b", body)}
-    frontier = list(used)
-    while frontier:
-        for dep in _CTE_DEPS[frontier.pop()]:
-            if dep not in used:
-                used.add(dep)
-                frontier.append(dep)
-    return [(n, text) for n, text in _CTES if n in used]
-
-
-# raw body text per registered query — the inline spelling every rewrite
-# must stay row-identical to (used by tests and same-JVM A/B harnesses)
-_BODIES: dict[str, str] = {}
-
-
-def _register(name: str, body: str, doc: str, *,
-              spark_body: str | None = None,
-              cte_where: dict[str, str] | None = None) -> None:
-    """``spark_body`` (r13): an equivalent respelling executed Spark-side
-    while the DuckDB oracle keeps running ``body`` verbatim (e.g. q67's
-    two-phase rollup).  Every divergence between the two texts must carry a
-    call-site equivalence argument and a rewritten==inline row pin in
-    tests/test_plans.py; the oracle check enforces it on every run."""
-    _BODIES[name] = body
-    sbody = spark_body or body
-    pruned_sql = _pruned_prelude(sbody, cte_where) + sbody
-
-    def fn(spark, sf_dir, _sql=pruned_sql):
-        _ensure_views(spark, sf_dir)
-        return spark.sql(_sql.replace("__SF__", sf_dir))
-
-    fn.__name__ = name
-    fn.__doc__ = doc
-    tags = ("tpcds", "exec", "bench") if name in _BENCH_TPCDS else ("tpcds", "exec")
-    query(name, oracle=_DUCK_DERIVE + body, tags=tags)(fn)
-
-
-def _register_shared_cte(name: str, body: str, doc: str, *,
-                         cte: str, final_marker: str,
-                         ref_prefix: str | tuple[str, ...],
-                         mat_where: str | None = None,
-                         cte_where: dict[str, str] | None = None) -> None:
-    """Register a query whose final statement consumes one heavy CTE many
-    times, materializing that CTE ONCE per invocation (r12, guide §3.3).
-
-    Spark inlines WITH-CTEs, so ``year_total`` consumed six ways in q4 ran
-    the three-channel fact aggregation six times (each copy pruned to one
-    channel-year by pushdown).  The rewrite computes the CTE once — all
-    channels, both years — writes it to a process-local temp parquet
-    (customer-grain rows, far smaller than the facts it aggregates; at
-    100 TB this spill-to-storage materialization is exactly what engines
-    with CTE materialization do), and the final self-join reads that.
-    Interleaved A/B at sf0.1: q4 2.85 s → 2.35 s.  Fresh directory per
-    invocation — nothing persists across runs (the write is inside the
-    timed region), and the plan stays a plain parquet scan so the
-    unparser round-trip is preserved (a localCheckpoint would analyze to
-    LogicalRDD, a refusal class).  Results identical; same oracle.
-    """
-    _BODIES[name] = body
-    idx = body.index(final_marker)
-    ctes_part, final_part = body[:idx], body[idx:]
-    # ``mat_where`` (r13) prunes the materialization to rows the final
-    # statement can consume, when the final statement's own predicates
-    # imply it (e.g. q64 reads only syear 2000/2001 of cross_sales) — the
-    # filter is on CTE OUTPUT columns, so equivalence is plain predicate
-    # pushdown; the DuckDB oracle runs the inline text and the
-    # rewritten==inline row pin in tests/test_plans.py enforces it.
-    mat_sql = (_pruned_prelude(body, cte_where) + ctes_part
-               + f" SELECT * FROM {cte}"
-               + (f" WHERE {mat_where}" if mat_where else ""))
-    view = f"{cte}_{name}"
-    final_sql = final_part
-    for rp in ((ref_prefix,) if isinstance(ref_prefix, str) else ref_prefix):
-        final_sql = final_sql.replace(f"{cte} {rp}", f"{view} {rp}")
-        assert f"{cte} {rp}" not in final_sql
-
-    def fn(spark, sf_dir, _mat=mat_sql, _final=final_sql, _view=view):
-        _ensure_views(spark, sf_dir)  # derive CTEs read the cached views
-        dest = os.path.join(
-            _MAT_TMP, f"{name}_{os.getpid()}_{next(_MAT_SEQ)}")
-        spark.sql(_mat.replace("__SF__", sf_dir)).write.mode(
-            "overwrite").parquet(dest)
-        spark.read.parquet(dest).createOrReplaceTempView(_view)
-        return spark.sql(_final.replace("__SF__", sf_dir))
-
-    fn.__name__ = name
-    fn.__doc__ = doc
-    tags = ("tpcds", "exec", "bench") if name in _BENCH_TPCDS else ("tpcds", "exec")
-    query(name, oracle=_DUCK_DERIVE + body, tags=tags)(fn)
-
-
-# Every TPC-DS fact CTE (3 sales + 3 returns channels) is a projection +
-# filter of the SAME base join — this pattern anchors the shared-fact
-# materialization below; a derive edit that breaks it fails loudly at import.
-_FACT_SRC_RE = re.compile(
-    r"^(\w+) AS \(\s*SELECT\s+(.*?)\s*"
-    r"FROM lineitem\s+JOIN orders ON l_orderkey = o_orderkey\s*"
-    r"(?:WHERE\s+(.*?))?\s*\)$",
-    re.DOTALL)
+        depth += (ch == "(") - (ch == ")")
+        if depth or (i and (inner[i - 1].isalnum() or inner[i - 1] == "_")):
+            continue
+        kw = re.match(r"WHERE |GROUP BY|HAVING|ORDER BY|LIMIT", inner[i:])
+        assert not kw or kw.group() == "WHERE ", \
+            f"{name}: push cannot target a CTE with top-level {kw.group()}"
+        if kw:
+            where = i
+    if where is None:
+        return f"{prefix}{inner}\n  WHERE ({pred})\n)"
+    return (f"{prefix}{inner[:where]}WHERE ({inner[where + 6:].strip()})"
+            f"\n  AND ({pred})\n)")
 
 
 def _split_select_list(sel: str) -> list[str]:
@@ -1150,154 +1029,166 @@ def _split_select_list(sel: str) -> list[str]:
     return out
 
 
-def _replace_body_cte(text: str, name: str, repl_body: str) -> str:
-    """Replace the definition of CTE ``name`` in a WITH-list with
-    ``repl_body`` (paren-depth aware; the CTE name appears as a definition
-    exactly once by construction)."""
-    start = text.index(f"{name} AS (")
-    i = text.index("(", start)
-    depth = 0
-    for j in range(i, len(text)):
-        if text[j] == "(":
-            depth += 1
-        elif text[j] == ")":
-            depth -= 1
-            if depth == 0:
-                return text[:start] + f"{name} AS ({repl_body})" + text[j + 1:]
-    raise ValueError(f"unbalanced CTE definition for {name}")
+# Every TPC-DS fact CTE (3 sales + 3 returns channels) is a projection +
+# filter of the SAME base join: name -> ({alias: expression}, channel
+# predicate).  The synthetic ``fact_base`` materialization rests on this
+# shape; a derive edit that breaks it fails loudly at import.
+_FACT_SRC_RE = re.compile(
+    r"^(\w+) AS \(\s*SELECT\s+(.*?)\s*"
+    r"FROM lineitem\s+JOIN orders ON l_orderkey = o_orderkey\s*"
+    r"(?:WHERE\s+(.*?))?\s*\)$",
+    re.DOTALL)
 
 
-def _register_shared_fact(name: str, body: str, doc: str, *,
-                          facts: list[str],
-                          mat_where: str | None = None,
-                          fact_where: dict[str, str] | None = None,
-                          mat_ctes: list[str] | None = None,
-                          mat_final_marker: str | None = None) -> None:
-    """Register a query whose body consumes several fact-channel CTEs,
-    materializing their SHARED base join once per invocation (r12,
-    guide §2.4/§3.3: do fewer passes — every channel is a projection of
-    the one lineitem⋈orders join, so N textual fact references need ONE
-    physical pass, not N).
+def _fact_columns(name: str, text: str) -> tuple[dict[str, str], str | None]:
+    m = _FACT_SRC_RE.match(text)
+    assert m, f"fact CTE {name} no longer matches the shared-join pattern"
+    cols: dict[str, str] = {}
+    for item in _split_select_list(m.group(2)):
+        am = re.search(r"\bAS\s+(\w+)\s*$", item)
+        assert am, f"unaliased column in {name}: {item!r}"
+        cols[am.group(1)] = item[: am.start()].rstrip()
+    return cols, m.group(3)
 
-    Mechanics: at registration, each fact CTE named in ``facts`` is parsed
-    into its per-column expressions and channel predicate (they all match
-    _FACT_SRC_RE by construction).  The invocation (a) executes ONE
-    ``SELECT <base cols> FROM lineitem JOIN orders`` pass — base cols
-    pruned to what the body-referenced channel columns actually derive
-    from — into a fresh process-local temp parquet, then (b) runs the
-    UNCHANGED body under a prelude in which each fact CTE is redefined to
-    compute its original column expressions FROM that materialization
-    (original channel WHERE kept verbatim).  The body text is
-    byte-identical to the inline spelling, so results are identical as
-    long as each redefined CTE produces the same rows — which it does by
-    construction, column for column.
 
-    ``mat_where`` / ``fact_where`` optionally push a date predicate that
-    the BODY already implies into the shared scan / one channel's
-    redefinition (e.g. every q14 fact reference joins date_dim on
-    sold_date_sk with d_year constrained; sold_date_sk = f(o_orderdate)
-    with f injective, so the o_orderdate window is exactly the rows that
-    can survive).  Each caller documents its implication; the DuckDB
-    oracle (which runs the original inline text) plus the
-    rewritten==inline row pin in tests/test_plans.py enforce it.
+_FACTS = {n: _fact_columns(n, text) for n, text in _CTES if "JOIN orders" in text}
 
-    Fresh scratch dir per invocation — the materialization write happens
-    inside the timed region and nothing persists across runs.
-    """
-    _BODIES[name] = body
-    fact_where = fact_where or {}
-    cte_map = dict(_CTES)
-    parsed: dict[str, tuple[dict[str, str], str | None]] = {}
-    for f in facts:
-        m = _FACT_SRC_RE.match(cte_map[f])
-        assert m, f"{name}: fact CTE {f} no longer matches the shared-join pattern"
-        amap: dict[str, str] = {}
-        for item in _split_select_list(m.group(2)):
-            am = re.search(r"\bAS\s+(\w+)\s*$", item)
-            assert am, f"{name}: unaliased column in {f}: {item!r}"
-            amap[am.group(1)] = item[: am.start()].rstrip()
-        parsed[f] = (amap, m.group(3))
 
-    used_cols: dict[str, list[str]] = {}
+def _fact_base(body: str, push: dict[str, str],
+               view: str) -> tuple[str, dict[str, str]]:
+    """The ONE lineitem⋈orders pass behind every fact CTE ``body`` reads, and
+    each of those CTEs redefined to compute its original column
+    expressions (channel WHERE kept verbatim) FROM its scratch copy
+    ``view`` — N textual fact references need one physical pass, not N.
+
+    The pass selects only the base columns the body-referenced fact
+    columns, channel predicates and pushes derive from.  When every fact
+    carries a predicate, their disjunction also prunes its rows (each
+    channel re-applies its own conjunction on read, so a row no channel
+    keeps is dead weight; single-table conjuncts such as l_suppkey % 4 = 1
+    additionally push below the join).  ``push["fact_base"]`` filters the
+    pass itself."""
     base_cols: set[str] = set()
-    for f in facts:
-        amap, pred = parsed[f]
-        used = [a for a in amap if re.search(rf"\b{a}\b", body)]
-        assert used, f"{name}: no column of {f} referenced by the body"
-        used_cols[f] = used
-        texts = [amap[a] for a in used]
-        texts += [p for p in (pred, fact_where.get(f)) if p]
-        for t in texts:
-            base_cols.update(re.findall(r"\b[lo]_\w+\b", t))
-    if mat_where:
-        base_cols.update(re.findall(r"\b[lo]_\w+\b", mat_where))
-
-    # The materialization only needs rows SOME consumer keeps: when every
-    # fact carries a predicate, their disjunction prunes the shared write
-    # (each channel re-applies its own conjunction on read, so a row that
-    # satisfies no channel's predicate is dead weight).  Single-table
-    # conjuncts (e.g. q95's shared l_suppkey % 4 = 1) additionally push
-    # below the join and shrink the join itself.  Skipped when any fact is
-    # unfiltered (the disjunction would be vacuously true).
-    per_fact_conj = []
-    for f in facts:
-        preds = [p for p in (parsed[f][1], fact_where.get(f)) if p]
-        per_fact_conj.append(" AND ".join(f"({p})" for p in preds)
-                             if preds else None)
-    mat_preds = [p for p in (mat_where,) if p]
-    if all(per_fact_conj):
-        mat_preds.append("(" + " OR ".join(f"({c})" for c in per_fact_conj)
-                         + ")")
-    mat_sql = ("SELECT " + ", ".join(sorted(base_cols))
-               + "\nFROM lineitem JOIN orders ON l_orderkey = o_orderkey"
-               + ("\nWHERE " + " AND ".join(mat_preds) if mat_preds else ""))
-    matview = f"shared_fact_{name}"
+    conj: list[str | None] = []
     redefs: dict[str, str] = {}
-    for f in facts:
-        amap, pred = parsed[f]
-        sel = ",\n         ".join(f"{amap[a]} AS {a}" for a in used_cols[f])
-        preds = [p for p in (pred, fact_where.get(f)) if p]
-        w = ("\n  WHERE " + " AND ".join(f"({p})" for p in preds)) if preds else ""
-        redefs[f] = f"{f} AS (\n  SELECT {sel}\n  FROM {matview}{w}\n)"
-    kept = _kept_ctes(body)
-    kept_names = {n for n, _ in kept}
-    assert all(f in kept_names for f in facts), f"{name}: fact not in closure"
-    prelude = "\nWITH " + ",\n".join(
-        redefs.get(n, text) for n, text in kept) + "\n"
-    final_sql = prelude + body
+    for n, (cols, pred) in _FACTS.items():
+        if not re.search(rf"\b{n}\b", body):
+            continue
+        used = [a for a in cols if re.search(rf"\b{a}\b", body)]
+        assert used, f"no column of fact {n} referenced by the body"
+        preds = [p for p in (pred, push.get(n)) if p]
+        for t in [cols[a] for a in used] + preds:
+            base_cols.update(re.findall(r"\b[lo]_\w+\b", t))
+        conj.append(" AND ".join(f"({p})" for p in preds) if preds else None)
+        sel = ",\n         ".join(f"{cols[a]} AS {a}" for a in used)
+        redefs[n] = (f"{n} AS (\n  SELECT {sel}\n  FROM {view}"
+                     + (f"\n  WHERE {pred}" if pred else "") + "\n)")
+    where = [push["fact_base"]] if "fact_base" in push else []
+    base_cols.update(re.findall(r"\b[lo]_\w+\b", push.get("fact_base", "")))
+    if all(conj):
+        where.append("(" + " OR ".join(f"({c})" for c in conj) + ")")
+    stmt = ("SELECT " + ", ".join(sorted(base_cols))
+            + "\nFROM lineitem JOIN orders ON l_orderkey = o_orderkey"
+            + ("\nWHERE " + " AND ".join(where) if where else ""))
+    return stmt, redefs
 
-    # Optional second-level materialization (§3.3, the year_total trick
-    # applied inside a shared-fact query): each named body CTE is computed
-    # ONCE per invocation into its own scratch parquet and its definition
-    # replaced by a scan, instead of being re-inlined at every reference
-    # (q14's cross_items is consumed by all three channel legs — inline,
-    # Spark derives the 3-channel INTERSECT three times).  Results
-    # identical by construction; rows pinned in test_plans.py.
-    cte_mats: list[tuple[str, str]] = []  # (view_name, mat_sql)
-    if mat_ctes:
-        assert mat_final_marker and mat_final_marker in final_sql
-        idx = final_sql.index(mat_final_marker)
-        ctes_part, final_stmt = final_sql[:idx], final_sql[idx:]
-        for cte in mat_ctes:
-            cte_view = f"{cte}_m_{name}"
-            cte_mats.append((cte_view, ctes_part + f" SELECT * FROM {cte}"))
-            ctes_part = _replace_body_cte(ctes_part, cte,
-                                          f"SELECT * FROM {cte_view}")
-        final_sql = ctes_part + final_stmt
 
-    def fn(spark, sf_dir, _mat=mat_sql, _final=final_sql, _view=matview,
-           _cte_mats=tuple(cte_mats)):
-        _ensure_views(spark, sf_dir)  # lineitem/orders session views
-        dest = os.path.join(
-            _MAT_TMP, f"{name}_{os.getpid()}_{next(_MAT_SEQ)}")
-        spark.sql(_mat).write.mode("overwrite").parquet(dest)
-        spark.read.parquet(dest).createOrReplaceTempView(_view)
-        for i, (cv, cm) in enumerate(_cte_mats):
-            cdest = f"{dest}_c{i}"
-            spark.sql(cm.replace("__SF__", sf_dir)).write.mode(
-                "overwrite").parquet(cdest)
-            spark.read.parquet(cdest).createOrReplaceTempView(cv)
-        return spark.sql(_final.replace("__SF__", sf_dir))
+class _Exec(NamedTuple):
+    """What one entry executes: each (scratch view, statement) in ``mats``
+    is computed once per invocation, in order, into fresh scratch parquet
+    read back as that view; ``final`` is the statement the entry returns.
+    ``body`` is the inline text the DuckDB oracle runs (with the derive
+    prelude) — the spelling every rewrite must stay row-identical to."""
+    body: str
+    mats: tuple[tuple[str, str], ...]
+    final: str
+
+
+def _plan(name: str, body: str, push: dict[str, str] | None = None,
+          materialize: tuple[str, ...] | list[str] = ()) -> _Exec:
+    """The executed texts of entry ``name`` (see _register)."""
+    push = push or {}
+    body_ctes, final = _split_ctes(body)
+    ctes = _CTES + body_ctes
+    mats: list[tuple[str, str]] = []
+    if "fact_base" in materialize:
+        view = f"fact_base_{name}"
+        stmt, redefs = _fact_base(body, push, view)
+        mats.append((view, stmt))
+        ctes = [(n, redefs.get(n, text)) for n, text in ctes]
+    missing = {c for c in push
+               if c not in materialize and not re.search(rf"\b{c}\b", body)}
+    assert not missing, f"{name}: push targets the body never reads: {missing}"
+    ctes = [(n, _append_where(text, n, push[n])
+             if n in push and n not in materialize else text)
+            for n, text in ctes]
+    names = [n for n, _ in ctes]
+    for cte in materialize:
+        if cte != "fact_base":
+            i = names.index(cte)
+            view = f"{cte}_{name}"
+            where = f" WHERE {push[cte]}" if cte in push else ""
+            mats.append((view, _with(ctes[:i + 1],
+                                     f"SELECT * FROM {cte}{where}")))
+            ctes[i] = (cte, f"{cte} AS (SELECT * FROM {view})")
+    return _Exec(body, tuple(mats), _with(ctes, final))
+
+
+# per-entry executed texts (read by tests and same-JVM A/B harnesses)
+_EXEC: dict[str, _Exec] = {}
+_scratch_root: str | None = None
+
+
+def _scratch_dir(name: str) -> str:
+    """A fresh directory for one invocation's materializations, under a
+    process-wide root made on first use and removed at interpreter exit —
+    nothing is reused across invocations and nothing outlives the
+    process."""
+    global _scratch_root
+    if _scratch_root is None:
+        _scratch_root = tempfile.mkdtemp(prefix="dfspark_tpcds_mat_")
+        atexit.register(shutil.rmtree, _scratch_root, True)
+    return tempfile.mkdtemp(prefix=f"{name}_", dir=_scratch_root)
+
+
+def _register(name: str, body: str, doc: str, *,
+              push: dict[str, str] | None = None,
+              materialize: tuple[str, ...] | list[str] = ()) -> None:
+    """Register an executed TPC-DS entry: ``body`` (an optional
+    ``, cte AS (...)`` list, then the final SELECT) under the derive
+    prelude pruned to the CTEs it references.  Two rewrite primitives
+    respell the Spark side while the DuckDB oracle runs ``body`` verbatim;
+    every use carries a call-site equivalence argument and a
+    rewritten==inline row pin in tests/test_plans.py.
+
+    ``push={cte: pred}`` keeps only the rows of ``cte`` satisfying
+    ``pred``: conjoined into the WHERE of a derive CTE (guide §2.3,
+    "shuffle fewer bytes": a date window the body already implies, pushed
+    below the fact's base join — the body's d_* constraint reaches the
+    fact only at the date_dim broadcast join, AFTER the lineitem⋈orders
+    pass), or filtering the materialization of a materialized CTE.
+
+    ``materialize=[cte, ...]`` computes each named CTE ONCE per invocation
+    (guide §3.3): Spark inlines WITH-CTEs, so a CTE consumed k times runs
+    k times.  ``SELECT * FROM cte``, under the CTEs it reaches, is written
+    to fresh scratch parquet, and the CTE's definition becomes
+    ``SELECT * FROM <scratch view>`` — references are left untouched.  The
+    plan stays a plain parquet scan so the unparser round-trip is
+    preserved (a localCheckpoint would analyze to LogicalRDD, a refusal
+    class); at 100 TB this spill-to-storage step is exactly what engines
+    with CTE materialization do.  The synthetic name ``fact_base`` is the
+    shared lineitem⋈orders join under every fact CTE (see _fact_base)."""
+    plan = _EXEC[name] = _plan(name, body, push, materialize)
+
+    def fn(spark, sf_dir):
+        _ensure_views(spark, sf_dir)  # derive CTEs read the cached views
+        if plan.mats:
+            dest = _scratch_dir(name)
+            for view, stmt in plan.mats:
+                path = os.path.join(dest, view)
+                spark.sql(stmt).write.parquet(path)
+                spark.read.parquet(path).createOrReplaceTempView(view)
+        return spark.sql(plan.final)
 
     fn.__name__ = name
     fn.__doc__ = doc
@@ -2750,7 +2641,7 @@ _YEAR_TOTAL_SIMPLE = """
     )
 """
 
-_register_shared_cte(
+_register(
     "tpcds_q74",
     _YEAR_TOTAL_SIMPLE + """
     SELECT t_s_secyear.customer_id,
@@ -2793,10 +2684,9 @@ _register_shared_cte(
     below both channel base joins (injective sold_date_sk = f(o_orderdate),
     calendar ends 2001-12-31).  A/B at sf0.1: 0.82 -> 0.72 s min, rows
     identical; pinned with q4/q11 in test_plans.py.""",
-    cte="year_total", final_marker="SELECT t_s_secyear.customer_id",
-    ref_prefix="t_",
-    cte_where={"store_sales": "o_orderdate >= DATE '2000-01-01'",
-               "web_sales": "o_orderdate >= DATE '2000-01-01'"},
+    materialize=["year_total"],
+    push={"store_sales": "o_orderdate >= DATE '2000-01-01'",
+          "web_sales": "o_orderdate >= DATE '2000-01-01'"},
 )
 
 _YEAR_TOTAL_FULL = """
@@ -2835,7 +2725,7 @@ _YEAR_TOTAL_FULL = """
     )
 """
 
-_register_shared_cte(
+_register(
     "tpcds_q11",
     _YEAR_TOTAL_FULL + """
     SELECT t_s_secyear.customer_id,
@@ -2878,13 +2768,12 @@ _register_shared_cte(
     r13: o_orderdate >= 2000-01-01 pushed below both channel base joins
     (same injectivity argument as q74).  A/B at sf0.1: 1.42 -> 1.21 s
     min, rows identical.""",
-    cte="year_total", final_marker="SELECT t_s_secyear.customer_id",
-    ref_prefix="t_",
-    cte_where={"store_sales": "o_orderdate >= DATE '2000-01-01'",
-               "web_sales": "o_orderdate >= DATE '2000-01-01'"},
+    materialize=["year_total"],
+    push={"store_sales": "o_orderdate >= DATE '2000-01-01'",
+          "web_sales": "o_orderdate >= DATE '2000-01-01'"},
 )
 
-_register_shared_cte(
+_register(
     "tpcds_q4",
     """
     , year_total AS (
@@ -2975,11 +2864,10 @@ _register_shared_cte(
     r13: o_orderdate >= 2000-01-01 pushed below all three channel base
     joins (same injectivity argument as q74).  A/B at sf0.1:
     1.64 -> 1.38 s min, rows identical.""",
-    cte="year_total", final_marker="SELECT t_s_secyear.customer_id",
-    ref_prefix="t_",
-    cte_where={"store_sales": "o_orderdate >= DATE '2000-01-01'",
-               "web_sales": "o_orderdate >= DATE '2000-01-01'",
-               "catalog_sales": "o_orderdate >= DATE '2000-01-01'"},
+    materialize=["year_total"],
+    push={"store_sales": "o_orderdate >= DATE '2000-01-01'",
+          "web_sales": "o_orderdate >= DATE '2000-01-01'",
+          "catalog_sales": "o_orderdate >= DATE '2000-01-01'"},
 )
 
 _register(
@@ -4818,7 +4706,7 @@ _register(
     pushed as the equivalent o_orderdate window below the fact base
     joins (same injectivity argument as q67).  A/B at sf0.1:
     1.19 -> 1.13 s min / 1.41 -> 1.29 med, rows identical.""",
-    cte_where={
+    push={
         "store_sales": "o_orderdate BETWEEN DATE '1996-01-01' "
                        "AND DATE '1996-12-31'",
         "web_sales": "o_orderdate BETWEEN DATE '1996-01-01' "
@@ -4870,17 +4758,16 @@ _register(
     FIRST on the rollup-NULL order key.""",
 )
 
-# q67 body (oracle + equivalence baseline) and its Spark-side respelling.
-# The inner aggregate is replaced by a TWO-PHASE rollup for execution:
-# finest-grain GROUP BY first, then ROLLUP over the partial sums.  Every
-# rollup level is a coarsening of the 8-column finest grain and DECIMAL
-# addition is exact and associative, so SUM(ps) per grouping set equals the
-# inline SUM — rows identical (pinned at 2 SFs in test_plans.py; measured
-# r13 interleaved A/B at sf0.1: inline 2.59 s -> two-phase 1.79 s min).
-# At 100 TB the win is the same §2.3 story: Expand(9x) runs over the
-# compacted finest-grain groups, not over every fact row, so the map-side
-# hash aggregate processes ~9x fewer rows.
-_Q67_INNER = """(SELECT i_category, i_class, i_brand, i_product_name, d_year,
+_register(
+    "tpcds_q67",
+    """
+    SELECT * FROM
+      (SELECT i_category, i_class, i_brand, i_product_name, d_year, d_qoy,
+              d_moy, s_store_id,
+              CAST(sumsales AS DOUBLE) AS sumsales,
+              CAST(rank() OVER (PARTITION BY i_category
+                                ORDER BY sumsales DESC) AS BIGINT) AS rk
+       FROM (SELECT i_category, i_class, i_brand, i_product_name, d_year,
                     d_qoy, d_moy, s_store_id,
                     SUM(CAST(coalesce(ss_sales_price * ss_quantity, 0)
                              AS DECIMAL(38,6))) AS sumsales
@@ -4890,33 +4777,7 @@ _Q67_INNER = """(SELECT i_category, i_class, i_brand, i_product_name, d_year,
                AND ss_store_sk = s_store_sk
                AND d_month_seq BETWEEN 1248 AND 1248 + 11
              GROUP BY ROLLUP(i_category, i_class, i_brand, i_product_name,
-                             d_year, d_qoy, d_moy, s_store_id)) dw1"""
-
-_Q67_INNER_TWOPHASE = """(SELECT i_category, i_class, i_brand,
-                    i_product_name, d_year, d_qoy, d_moy, s_store_id,
-                    SUM(ps) AS sumsales
-             FROM (SELECT i_category, i_class, i_brand, i_product_name,
-                          d_year, d_qoy, d_moy, s_store_id,
-                          SUM(CAST(coalesce(ss_sales_price * ss_quantity, 0)
-                                   AS DECIMAL(38,6))) AS ps
-                   FROM store_sales, date_dim, store, item
-                   WHERE ss_sold_date_sk = d_date_sk
-                     AND ss_item_sk = i_item_sk
-                     AND ss_store_sk = s_store_sk
-                     AND d_month_seq BETWEEN 1248 AND 1248 + 11
-                   GROUP BY i_category, i_class, i_brand, i_product_name,
-                            d_year, d_qoy, d_moy, s_store_id) base
-             GROUP BY ROLLUP(i_category, i_class, i_brand, i_product_name,
-                             d_year, d_qoy, d_moy, s_store_id)) dw1"""
-
-_Q67_BODY = f"""
-    SELECT * FROM
-      (SELECT i_category, i_class, i_brand, i_product_name, d_year, d_qoy,
-              d_moy, s_store_id,
-              CAST(sumsales AS DOUBLE) AS sumsales,
-              CAST(rank() OVER (PARTITION BY i_category
-                                ORDER BY sumsales DESC) AS BIGINT) AS rk
-       FROM {_Q67_INNER}) dw2
+                             d_year, d_qoy, d_moy, s_store_id)) dw1) dw2
     WHERE rk <= 100
     ORDER BY i_category ASC NULLS FIRST, i_class ASC NULLS FIRST,
              i_brand ASC NULLS FIRST, i_product_name ASC NULLS FIRST,
@@ -4924,30 +4785,26 @@ _Q67_BODY = f"""
              d_moy ASC NULLS FIRST, s_store_id ASC NULLS FIRST,
              sumsales, rk
     LIMIT 100
-    """
-
-_register(
-    "tpcds_q67",
-    _Q67_BODY,
+    """,
     doc="""TPC-DS q67 (reference tpcds_sql/67.sql) executed: top-100
     revenue rows per category over an EIGHT-level rollup — the rank
     window runs over the rollup output itself (partition boundaries
     include the all-NULL super-aggregate rows).  Rank orders by the
     exact DECIMAL sum; the LIMIT's ORDER BY spells NULLS FIRST on
     every rollup key (cut rule); month-seq 1212 -> 1248.
-    Spark-side execution (r13): two-phase rollup + the o_orderdate
-    window pushed below the fact base join (equivalence arguments at
-    the spelling definitions above and in _pruned_prelude).""",
-    spark_body=_Q67_BODY.replace(_Q67_INNER, _Q67_INNER_TWOPHASE),
+    Spark-side execution: the o_orderdate window pushed below the fact
+    base join (r13 A/B at sf0.1: 2.59 -> 2.14 s min).  A two-phase
+    rollup (finest-grain GROUP BY, then ROLLUP over the partial sums)
+    measured faster still (1.37 s) but adds a third exchange, over the
+    plan's shuffle budget of two.""",
     # d_month_seq BETWEEN 1248 AND 1259 == calendar months 1996-01..
     # 1996-12 (d_month_seq = 1200 + (year-1992)*12 + month-1), and
     # ss_sold_date_sk = datediff(o_orderdate,'1992-01-01') + 2450000 =
     # d_date_sk forces o_orderdate = d_date — so the 1996 o_orderdate
     # window keeps exactly the fact rows the d_month_seq join keeps,
-    # now pruned BEFORE the lineitem⋈orders pass (r13 A/B at sf0.1:
-    # with two-phase, min 1.79 -> 1.37 s; rows identical all cycles).
-    cte_where={"store_sales": "o_orderdate BETWEEN DATE '1996-01-01' "
-                              "AND DATE '1996-12-31'"},
+    # now pruned BEFORE the lineitem⋈orders pass.
+    push={"store_sales": "o_orderdate BETWEEN DATE '1996-01-01' "
+                         "AND DATE '1996-12-31'"},
 )
 
 
@@ -5021,7 +4878,7 @@ def _q49_channel(alias: str) -> str:
     """
 
 
-_register_shared_fact(
+_register(
     "tpcds_q49",
     ", "
     + _q49_in("web", "web_sales", "web_returns", "ws", "wr").lstrip()
@@ -5062,15 +4919,14 @@ _register_shared_fact(
     threshold retargets to > 1000 (the derived 0.1x-extendedprice
     refunds cap near 10k, selecting nothing); ordinal ORDER BY
     1,4,5,2 verbatim.""",
-    facts=["store_sales", "web_sales", "catalog_sales",
-           "store_returns", "web_returns", "catalog_returns"],
+    materialize=["fact_base"],
     # Each in_* leg constrains its SALES side with {p}_sold_date_sk =
     # d_date_sk AND d_year = 2000 AND d_moy = 12 (December 2000 lies in
     # date_dim's domain; the sk mapping is injective in o_orderdate), so
     # sales rows outside that month never join.  The RETURNS sides carry
     # no date predicate of their own (they are keyed to the sales rows by
     # order/item), so they stay unfiltered.
-    fact_where={
+    push={
         "store_sales": "o_orderdate >= DATE '2000-12-01'"
                        " AND o_orderdate <= DATE '2000-12-31'",
         "web_sales": "o_orderdate >= DATE '2000-12-01'"
@@ -5642,7 +5498,7 @@ _register(
     diff keys so the LIMIT cut is deterministic under ties.""",
 )
 
-_register_shared_fact(
+_register(
     "tpcds_q78",
     """
     , ws AS (
@@ -5721,8 +5577,7 @@ _register_shared_fact(
     engines.  The three channel aggregations shuffle once each on
     (year, item, customer) and the two LEFT JOINs reuse that
     partitioning.""",
-    facts=["store_sales", "web_sales", "catalog_sales",
-           "store_returns", "web_returns", "catalog_returns"],
+    materialize=["fact_base"],
     # The ss aggregate groups by d_year and the final WHERE keeps only
     # ss_sold_year = 2000, so store fact rows outside calendar-2000 feed
     # only discarded groups; ws/cs groups join ss on ws/cs_sold_year =
@@ -5731,7 +5586,7 @@ _register_shared_fact(
     # non-matching groups and nothing else.  The RETURNS channels feed
     # the never-returned anti-joins (IS NULL) with no date constraint:
     # a return in ANY year disqualifies a sale, so they stay unfiltered.
-    fact_where={
+    push={
         "store_sales": "o_orderdate >= DATE '2000-01-01'"
                        " AND o_orderdate <= DATE '2000-12-31'",
         "web_sales": "o_orderdate >= DATE '2000-01-01'"
@@ -5886,7 +5741,7 @@ def _q14_channel(channel: str, fact: str, p: str) -> str:
               > (SELECT average_sales FROM avg_sales)"""
 
 
-_register_shared_fact(
+_register(
     "tpcds_q14",
     """
     , cross_items AS (
@@ -5963,7 +5818,6 @@ _register_shared_fact(
     list_price products decimal-exact (q17 macro shape); the unnamed
     sum()s alias sum_sales / sum_number_sales on both sides; NULLS
     FIRST pins the rollup under LIMIT 100.  Constants verbatim.""",
-    facts=["store_sales", "web_sales", "catalog_sales"],
     # Every q14 fact reference joins date_dim on {p}_sold_date_sk =
     # d_date_sk with d_year BETWEEN 1998 AND 2000 (cross_items,
     # avg_sales) or d_year = 2000 AND d_moy = 11 (channel legs).
@@ -5972,16 +5826,16 @@ _register_shared_fact(
     # [1995-01-01, 2001-12-31] covers 1998-2000 — so the join match set
     # is exactly o_orderdate in the window below; rows outside it can
     # never reach any of the nine fact consumptions.
-    mat_where="o_orderdate >= DATE '1998-01-01'"
-              " AND o_orderdate <= DATE '2000-12-31'",
+    push={"fact_base": "o_orderdate >= DATE '1998-01-01'"
+                       " AND o_orderdate <= DATE '2000-12-31'"},
+    # fact_base: the nine fact consumptions share one base-join pass.
     # cross_items is consumed by all three channel legs; inline, Spark
-    # re-derives the 3-channel INTERSECT per leg (9 fact passes).  The
-    # second-level materialization computes it once (item-grain rows).
+    # re-derives the 3-channel INTERSECT per leg.  Materialized after
+    # fact_base, it is computed once (item-grain rows) over that pass.
     # avg_sales was measured too: the extra write+read round-trip cost
     # more than the saved recomputation (interleaved A/B min 4.02 vs
     # 3.90 with both mats, 3.54 vs 3.98 with cross_items only).
-    mat_ctes=["cross_items"],
-    mat_final_marker="SELECT channel, i_brand_id",
+    materialize=["fact_base", "cross_items"],
 )
 
 _Q23_CTES = """
@@ -6112,7 +5966,7 @@ _register(
     than DuckDB); netpaid stays decimal until comparison/output.""",
 )
 
-_register_shared_cte(
+_register(
     "tpcds_q64",
     """
     , cs_ui AS (
@@ -6230,11 +6084,9 @@ _register_shared_cte(
     exactly the rows whose d1 join can satisfy the syear filter).
     r13 interleaved A/B at sf0.1: inline 2.70/3.87 (min/med) ->
     2.28/2.36 s, rows identical every cycle; pinned at 2 SFs.""",
-    cte="cross_sales",
-    final_marker="SELECT cs1.product_name",
-    ref_prefix=("cs1", "cs2"),
-    mat_where="syear IN (2000, 2000 + 1)",
-    cte_where={"store_sales": "o_orderdate >= DATE '2000-01-01'"},
+    materialize=["cross_sales"],
+    push={"cross_sales": "syear IN (2000, 2000 + 1)",
+          "store_sales": "o_orderdate >= DATE '2000-01-01'"},
 )
 
 

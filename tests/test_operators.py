@@ -989,46 +989,3 @@ def test_expr_fold_helpers_bit_equal(spark):
         return p
 
     assert norm(old) == norm(new)
-
-
-def test_two_level_distinct_guard_shapes(spark, monkeypatch):
-    """r13: multi-DISTINCT entries carry two plan shapes behind the
-    input-size guard (helpers.two_level_distinct) — Spark's Expand-based
-    single-scan aggregate below the crossover (the shape the driver's
-    bench always sees at the testdata SFs), independent single-distinct
-    branches above it.  Both shapes must return identical rows at two SFs
-    and must actually BE the two shapes (Expand present/absent)."""
-    import re
-    from collections import Counter
-
-    from datafusion_spark.queries import QUERIES
-    from tests.conftest import SF_SMALL
-
-    def plan(df):
-        return df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted")
-
-    for sf in (SF_SMALL, "/root/testdata/sf0.01"):
-        for name in ("cb_overview_counts", "cbx_q00", "cbx_q01"):
-            monkeypatch.delenv("DFSPARK_DISTINCT_EXPAND_MAX_BYTES",
-                               raising=False)
-            small_df = QUERIES[name](spark, sf)
-            got_small = Counter(map(repr, small_df.collect()))
-            assert "Expand" in plan(small_df), (name, sf)
-            monkeypatch.setenv("DFSPARK_DISTINCT_EXPAND_MAX_BYTES", "0")
-            big_df = QUERIES[name](spark, sf)
-            got_big = Counter(map(repr, big_df.collect()))
-            if name == "cb_overview_counts":
-                # two-level: first-level (user_id, event_type) compaction;
-                # the remaining Expand runs over the pairs, not the rows
-                # exactly the 2-column pair key (the small shape's distinct
-                # exchange is (user_id, event_type, gid) — 3 columns)
-                pair_key = r"hashpartitioning\(user_id#\d+L?, event_type#\d+, \d+\)"
-                assert re.search(pair_key, plan(big_df)), (name, sf)
-                assert not re.search(pair_key, plan(small_df)), (name, sf)
-            else:
-                # branch split: no Expand anywhere, one single-distinct
-                # two-level aggregate per branch
-                assert "Expand" not in plan(big_df), (name, sf)
-            assert got_small == got_big, (name, sf)
-    monkeypatch.delenv("DFSPARK_DISTINCT_EXPAND_MAX_BYTES", raising=False)

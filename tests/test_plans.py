@@ -331,16 +331,16 @@ def test_tpcds_prelude_pruning_exact_and_equivalent(spark):
     assert len(tx._CTES) == 24
 
     # (b) pruning keeps referenced names (spot: q14's three channels + dims)
-    pruned = tx._pruned_prelude(" FROM store_sales, web_sales x, item i "
-                                "JOIN date_dim ON 1=1 ")
+    pruned = tx._plan("t", " FROM store_sales, web_sales x, item i "
+                      "JOIN date_dim ON 1=1 ").final
     for n in ("store_sales", "web_sales", "item", "date_dim"):
         assert f"{n} AS (" in pruned
     assert "inventory AS (" not in pruned
 
     # (c) pruned and full spellings return identical rows (q3 at sf0.001)
-    body = QUERIES["tpcds_q3"].__defaults__[0]
+    body = tx._EXEC["tpcds_q3"].final
     body_tail = body[body.index("SELECT dt.d_year"):]
-    full_sql = (tx._SPARK_DERIVE + body_tail).replace("__SF__", SF_SMALL)
+    full_sql = tx._SPARK_DERIVE + body_tail
     tx._ensure_views(spark, SF_SMALL)  # derive CTEs read the session views
     got_pruned = [tuple(r) for r in QUERIES["tpcds_q3"](spark, SF_SMALL).collect()]
     got_full = [tuple(r) for r in spark.sql(full_sql).collect()]
@@ -391,6 +391,16 @@ def test_clickbench_hits_pruning_exact_and_equivalent(spark):
         assert got_pruned == got_full, name
 
 
+def _tpcds_scratch() -> set[str]:
+    """Invocation directories currently under the TPC-DS scratch root."""
+    import os
+
+    import datafusion_spark.queries.tpcds_exec as tx
+
+    root = tx._scratch_root
+    return set(os.listdir(root)) if root else set()
+
+
 def test_tpcds_shared_cte_materialization_equivalent(spark):
     """r12 (+r13 o_orderdate push): q4/q11/q74 materialize year_total once
     per invocation instead of inlining it per reference, with the year
@@ -398,36 +408,34 @@ def test_tpcds_shared_cte_materialization_equivalent(spark):
     must return exactly the INLINE spelling's rows (the unmodified body
     the DuckDB oracle runs — no pushed predicate), and each invocation
     must write a FRESH scratch directory (no cross-run reuse)."""
-    import os
-
     import datafusion_spark.queries.tpcds_exec as tx
 
     tx._ensure_views(spark, SF_SMALL)  # derive CTEs read the session views
     for name in ("tpcds_q74", "tpcds_q11", "tpcds_q4"):
-        body = tx._BODIES[name]
-        assert "o_orderdate" not in body  # the oracle body carries no push
-        inline_sql = (tx._pruned_prelude(body) + body).replace(
-            "__SF__", SF_SMALL)
+        rec = tx._EXEC[name]
+        assert "o_orderdate" not in rec.body  # the oracle body carries no push
+        inline_sql = tx._plan(name, rec.body).final
         got_inline = [tuple(r) for r in spark.sql(inline_sql).collect()]
-        mat_sql = QUERIES[name].__defaults__[0]
+        ((view, mat_sql),) = rec.mats
         assert "o_orderdate >= DATE '2000-01-01'" in mat_sql  # push present
-        before = (set(os.listdir(tx._MAT_TMP))
-                  if os.path.isdir(tx._MAT_TMP) else set())
+        assert f"year_total AS (SELECT * FROM {view})" in rec.final
+        before = _tpcds_scratch()
         got_mat = [tuple(r) for r in QUERIES[name](spark, SF_SMALL).collect()]
         got_mat2 = [tuple(r) for r in QUERIES[name](spark, SF_SMALL).collect()]
-        after = set(os.listdir(tx._MAT_TMP))
+        after = _tpcds_scratch()
         assert got_mat == got_inline == got_mat2, name
         assert len(after - before) == 2, "each invocation must write fresh scratch"
 
 
 def test_tpcds_shared_fact_materialization_equivalent(spark):
-    """r12: q14/q49/q78/q95 materialize the shared lineitem⋈orders fact
-    base once per invocation; every consuming channel CTE is redefined to
-    project its original expressions from that materialization (body text
-    unchanged).  The rewritten spelling must return exactly the inline
-    spelling's rows — including under the per-channel date predicates the
-    registration pushes into the materialization — and each invocation
-    must write a FRESH scratch directory (no cross-run reuse)."""
+    """r12: q14/q49 materialize the shared lineitem⋈orders fact base
+    (``fact_base``) once per invocation; every consuming channel CTE is
+    redefined to project its original expressions from that
+    materialization (body text unchanged).  The rewritten spelling must
+    return exactly the inline spelling's rows — including under the
+    per-channel date predicates pushed into the materialization — and
+    each invocation must write a FRESH scratch directory holding one
+    output per materialization (no cross-run reuse)."""
     import os
     from collections import Counter
 
@@ -436,27 +444,29 @@ def test_tpcds_shared_fact_materialization_equivalent(spark):
 
     tx._ensure_views(spark, SF_SMALL)
     for name in ("tpcds_q14", "tpcds_q49"):
-        body = ORACLES[name][len(tx._DUCK_DERIVE):]
-        inline_sql = (tx._pruned_prelude(body) + body).replace("__SF__", SF_SMALL)
+        rec = tx._EXEC[name]
+        assert ORACLES[name] == tx._DUCK_DERIVE + rec.body
+        inline_sql = tx._plan(name, rec.body).final
         got_inline = Counter(map(repr, spark.sql(inline_sql).collect()))
-        before = set(os.listdir(tx._MAT_TMP)) if os.path.isdir(tx._MAT_TMP) else set()
+        before = _tpcds_scratch()
         got_mat = Counter(map(repr, QUERIES[name](spark, SF_SMALL).collect()))
-        after = set(os.listdir(tx._MAT_TMP))
+        new = _tpcds_scratch() - before
         assert got_mat == got_inline, name
-        n_mats = 1 + len(QUERIES[name].__defaults__[3])  # fact mat + cte mats
-        assert len(after - before) == n_mats, "each invocation writes fresh scratch"
+        assert len(new) == 1, "each invocation writes fresh scratch"
+        assert sorted(os.listdir(os.path.join(tx._scratch_root, *new))) \
+            == sorted(view for view, _ in rec.mats)
         # the registered final statement reads the shared view, never the join
-        final_sql = QUERIES[name].__defaults__[1]
-        assert f"shared_fact_{name}" in final_sql
-        assert "JOIN orders" not in final_sql
+        assert rec.mats[0][0] == f"fact_base_{name}"
+        assert f"FROM fact_base_{name}" in rec.final
+        assert "JOIN orders" not in rec.final
         if name == "tpcds_q14":
             # cross_items is second-level materialized: the 3-channel
             # INTERSECT runs once in its mat, never in the final statement
-            assert "INTERSECT" not in final_sql
-            assert "cross_items AS (SELECT * FROM cross_items_m_tpcds_q14)" \
-                in final_sql
+            assert "INTERSECT" not in rec.final
+            assert "cross_items AS (SELECT * FROM cross_items_tpcds_q14)" \
+                in rec.final
         # the materialization statement is the single base-join pass, pruned
-        mat_sql = QUERIES[name].__defaults__[0]
+        mat_sql = rec.mats[0][1]
         assert mat_sql.count("JOIN orders") == 1
         assert "l_linenumber" not in mat_sql  # q14/q49 never derive from it
 
@@ -464,11 +474,10 @@ def test_tpcds_shared_fact_materialization_equivalent(spark):
 def test_tpcds_q64_q67_rewrite_equivalent(spark):
     """r13: q64 materializes cross_sales once per invocation with the
     syear window pruned into the mat and the equivalent o_orderdate window
-    pushed below the fact base join; q67 executes a two-phase rollup with
-    the same o_orderdate push.  Both rewrites must return exactly the
-    inline spelling's rows (the spelling the DuckDB oracle runs) at two
-    SFs, and q64 must write fresh scratch per invocation."""
-    import os
+    pushed below the fact base join; q67 and q51 push their o_orderdate
+    windows.  Each rewrite must return exactly the inline spelling's rows
+    (the spelling the DuckDB oracle runs) at two SFs, and q64 must write
+    fresh scratch per invocation."""
     from collections import Counter
 
     import datafusion_spark.queries.tpcds_exec as tx
@@ -476,31 +485,71 @@ def test_tpcds_q64_q67_rewrite_equivalent(spark):
     for sf in (SF_SMALL, "/root/testdata/sf0.01"):
         tx._ensure_views(spark, sf)
         for name in ("tpcds_q64", "tpcds_q67", "tpcds_q51"):
-            body = tx._BODIES[name]
-            inline_sql = (tx._pruned_prelude(body) + body).replace("__SF__", sf)
+            inline_sql = tx._plan(name, tx._EXEC[name].body).final
             got_inline = Counter(map(repr, spark.sql(inline_sql).collect()))
-            before = (set(os.listdir(tx._MAT_TMP))
-                      if os.path.isdir(tx._MAT_TMP) else set())
+            before = _tpcds_scratch()
             got_new = Counter(map(repr, QUERIES[name](spark, sf).collect()))
-            after = set(os.listdir(tx._MAT_TMP))
+            after = _tpcds_scratch()
             assert got_new == got_inline, (name, sf)
             if name == "tpcds_q64":
                 assert len(after - before) == 1, "q64 writes fresh scratch"
 
-    # structural pins: the executed texts carry the pushed windows and the
-    # two-phase shape; the oracle bodies do NOT (they stay the inline text)
-    q64_mat = QUERIES["tpcds_q64"].__defaults__[0]
-    q64_final = QUERIES["tpcds_q64"].__defaults__[1]
+    # structural pins: the executed texts carry the pushed windows; the
+    # oracle bodies do NOT (they stay the inline text)
+    q64 = tx._EXEC["tpcds_q64"]
+    ((view, q64_mat),) = q64.mats
     assert "o_orderdate >= DATE '2000-01-01'" in q64_mat
     assert "syear IN (2000, 2000 + 1)" in q64_mat
-    assert "cross_sales_tpcds_q64 cs1" in q64_final
-    assert "cross_sales" not in q64_final.replace("cross_sales_tpcds_q64", "")
-    q67_sql = QUERIES["tpcds_q67"].__defaults__[0]
+    # the final statement reads cross_sales only through the scratch view
+    assert f"cross_sales AS (SELECT * FROM {view})" in q64.final
+    assert q64.final.count("cross_sales AS (") == 1
+    assert "FROM cross_sales cs1, cross_sales cs2" in q64.final
+    q67_sql = tx._EXEC["tpcds_q67"].final
     assert "o_orderdate BETWEEN DATE '1996-01-01'" in q67_sql
     assert q67_sql.count("GROUP BY ROLLUP") == 1
-    assert "SUM(ps) AS sumsales" in q67_sql  # two-phase: ROLLUP over sums
-    q51_sql = QUERIES["tpcds_q51"].__defaults__[0]
+    q51_sql = tx._EXEC["tpcds_q51"].final
     assert q51_sql.count("o_orderdate BETWEEN DATE '1996-01-01'") == 2
     for name in ("tpcds_q64", "tpcds_q67", "tpcds_q51"):
-        assert "o_orderdate" not in tx._BODIES[name]
-        assert "SUM(ps)" not in tx._BODIES[name]
+        assert "o_orderdate" not in tx._EXEC[name].body
+
+
+def test_tpcds_push_keeps_existing_or_intact(spark):
+    """A pushed predicate conjoins as WHERE (<existing>) AND (<pred>): an
+    OR in the CTE's own WHERE must not capture the pushed conjunct."""
+    import datafusion_spark.queries.tpcds_exec as tx
+
+    cte = tx._append_where(
+        "t AS (\n  SELECT id FROM range(10)\n  WHERE id = 1 OR id = 8\n)",
+        "t", "id > 5")
+    assert [r.id for r in spark.sql(f"WITH {cte} SELECT id FROM t").collect()] \
+        == [8]
+
+
+def test_tpcds_scratch_owned_by_process(tmp_path):
+    """Importing tpcds_exec creates no directory; a materializing entry
+    makes its scratch on first use, and the process removes it at exit."""
+    import os
+    import subprocess
+    import sys
+    import textwrap
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = textwrap.dedent(f"""
+        import os
+        import datafusion_spark.queries.tpcds_exec
+        from datafusion_spark import get_spark
+        from datafusion_spark.queries import QUERIES
+        assert os.listdir({str(tmp_path)!r}) == [], "import created a dir"
+        spark = get_spark("scratch", master="local[2]", shuffle_partitions=2)
+        QUERIES["tpcds_q4"](spark, {SF_SMALL!r}).collect()
+        print("SCRATCH", [d for d in os.listdir({str(tmp_path)!r})
+                          if d.startswith("dfspark_")])
+        spark.stop()
+    """)
+    env = dict(os.environ, TMPDIR=str(tmp_path), SPARK_GRAFT_DRIVER_MEM="1g",
+               PYTHONPATH=repo)
+    out = subprocess.run([sys.executable, "-c", script], cwd=repo, env=env,
+                         capture_output=True, text=True, timeout=300)
+    assert out.returncode == 0, out.stderr[-2000:]
+    assert "SCRATCH ['dfspark_tpcds_mat_" in out.stdout, out.stdout[-2000:]
+    assert not [d for d in os.listdir(tmp_path) if d.startswith("dfspark_")]
